@@ -123,7 +123,6 @@ def connected_components(
     resume: bool = False,
     run_id: str = "cc",
     metrics_sink: MetricsSink | None = None,
-    check_every: int = 1,
 ) -> DataFrame:
     """(vertex long, component long) — component = min vertex id, exact.
 
@@ -134,23 +133,12 @@ def connected_components(
     complete round (the algorithm state IS the link set, so restarting on
     it is exact).  Per-round link counts/fingerprints go to the S6 sink.
 
-    ``check_every``: fuse this many large-star+small-star rounds into
-    ONE Spark job (the pagerank/LPA fused-block discipline — interior
-    rounds end in a lazy ``localCheckpoint``, the block-end fingerprint
-    is the only action).  Labels are bit-identical: the star rounds are
-    idempotent at the fixpoint, so overshooting a mid-block convergence
-    changes nothing; only metric/convergence granularity coarsens to
-    block boundaries.  Durable checkpoints keep their cadence.
-
-    MEASURED CAVEAT — unlike pagerank/LPA, fusing HURTS here (2x wall
-    at 2e7 edges: 12 s/run per-round vs 27 s fused): each star round
-    references its input in several branches, and inside one fused job
-    Spark launches those consumer stages concurrently BEFORE the lazy
-    interior cache exists, so they race and recompute the round instead
-    of sharing it.  The per-round fingerprint action (the thing fusion
-    removes) is what forces materialization between fan-outs.  Default
-    1 is the fast path; the knob stays for workloads whose round count
-    dwarfs per-job overhead, with this trade documented.
+    Each round is its own job, ended by the fingerprint action.  Fusing
+    several rounds into one job (the pagerank/LPA ``check_every``
+    discipline) measured 2x slower at 2e7 edges: each star round reads
+    its input in several branches, and inside one job Spark launches
+    those consumer stages before the lazy interior cache exists, so
+    they recompute the round instead of sharing it.
     """
     spark = edges.sparkSession
     ckpt = CheckpointManager(checkpoint_dir, run_id)
@@ -190,10 +178,6 @@ def connected_components(
         default_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
         it = start_it
         while it < max_iter:
-            block = min(max(check_every, 1), max_iter - it)
-            if checkpoint_dir is not None:
-                block = min(block, checkpoint_every - it % checkpoint_every)
-            block = max(block, 1)
             t0 = time.monotonic()
             # r6 scale-adaptive exchanges: size this round's shuffles to
             # the CURRENT link count (the fingerprint already tallies
@@ -202,22 +186,21 @@ def connected_components(
             # default so cluster-scale runs are untouched)
             round_p = adaptive_shuffle_partitions(prev_fp[1], default_p)
             with scoped_shuffle_partitions(spark, round_p):
-                for _ in range(block):
-                    # r6: the large-star output feeds BOTH small-star
-                    # branches (its min agg and its join), and the two
-                    # copies optimize into non-canonically-equal
-                    # subtrees (filter/pruning pushdown diverges), so
-                    # ReusedExchange never collapses them — a lazy
-                    # chain computes the large star TWICE per round
-                    # (measured: 4x 64-task map stages per round job at
-                    # 2e7 edges).  Materializing it eagerly costs one
-                    # extra job per round and removes the duplicate
-                    # compute outright; labels are bit-identical (same
-                    # algebra, same round count).
-                    e = _small_star(
-                        _large_star(e).localCheckpoint(eager=True)
-                    ).localCheckpoint(eager=False)
-                it += block
+                # the large-star output feeds BOTH small-star
+                # branches (its min agg and its join), and the two
+                # copies optimize into non-canonically-equal
+                # subtrees (filter/pruning pushdown diverges), so
+                # ReusedExchange never collapses them — a lazy
+                # chain computes the large star TWICE per round
+                # (measured: 4x 64-task map stages per round job at
+                # 2e7 edges).  Materializing it eagerly costs one
+                # extra job per round and removes the duplicate
+                # compute outright; labels are bit-identical (same
+                # algebra, same round count).
+                e = _small_star(
+                    _large_star(e).localCheckpoint(eager=True)
+                ).localCheckpoint(eager=False)
+                it += 1
                 fp = _fingerprint(e)
             wall = time.monotonic() - t0
             converged = fp == prev_fp

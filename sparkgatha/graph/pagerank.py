@@ -19,7 +19,11 @@ Two physical strategies, one semantics (chosen by ``strategy``):
       **partition-local** (child partitioning already hash(dst)) —
       a zero-shuffle superstep;
     * the vertex table is hash(vertex)-partitioned, so the
-      rank-update join and the stats join are co-partitioned too.
+      rank-update join and the stats join are co-partitioned too;
+    * hot DESTINATION vertices (in-degree > threshold) are split off
+      the layout by skew.split_hot keyed on dst (G10): their edges are
+      salted across all partitions and their per-partition partial sums
+      recombine through a (#hot x P)-row exchange — exact two-level sum.
 
 ``shuffle`` (the 10^12-file regime, rank vector too big to broadcast):
     * edges hash-partitioned by **src**, normalized in place via a
@@ -27,10 +31,10 @@ Two physical strategies, one semantics (chosen by ``strategy``):
       IS the layout);
     * per superstep only the small rank state shuffles into a
       sort-merge join; contributions shuffle once into groupBy(dst);
-    * hot SOURCE vertices (out-degree > threshold, the G10 straggler
-      transposed to the src side) are salted across all partitions at
-      layout time and normalized/joined via broadcasts of their
-      ≤HOT_MIRROR_CAP-row out-weight and rank slices — the salted
+    * hot SOURCE vertices (out-degree > threshold) are split off by
+      the same skew.split_hot keyed on src (G10): their edges are salted
+      across all partitions and normalized/joined via broadcasts of
+      their ≤HOT_MIRROR_CAP-row out-weight and rank slices — the salted
       edges never re-shuffle, and the algebra is exact (L7 tests).
 
 Superstep actions: exactly ONE Spark job per fused block — the stats
@@ -54,8 +58,8 @@ link-graph algorithms over the co-occurrence graph.
 
 from __future__ import annotations
 
-import logging
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Window as W, functions as F
@@ -63,17 +67,8 @@ from pyspark.storagelevel import StorageLevel
 
 from sparkgatha.graph.checkpoint import CheckpointManager
 from sparkgatha.graph.metrics import MetricsSink, partition_fingerprints, state_fingerprint
+from sparkgatha.graph.skew import BROADCAST_MAX_VERTICES, split_hot
 from sparkgatha.util import no_aqe
-
-log = logging.getLogger(__name__)
-
-#: above this vertex count the rank vector stops being broadcastable
-BROADCAST_MAX_VERTICES = 20_000_000
-
-#: mirrored-hot-vertex cap per run (G10): vertices beyond it fall back to
-#: the straggler path — logged, never silent (each mirrored vertex costs
-#: (#hot x P) combine rows per superstep, so the cap bounds that exchange)
-HOT_MIRROR_CAP = 10_000
 
 
 @dataclass
@@ -101,16 +96,17 @@ class PreparedGraph:
     to every call."""
 
     cold: DataFrame                       # normalized, laid-out edges
-    hot: DataFrame | None                 # G10 mirrored hot-dst (broadcast
-                                          # mode) or salted hot-src (shuffle
-                                          # mode) edges
+    hot: DataFrame | None                 # G10 split-off edges of hot dsts
+                                          # (broadcast mode) or hot srcs
+                                          # (shuffle mode), salted across
+                                          # all partitions
     vertices: DataFrame                   # (vertex, has_out), persisted
     n: int                                # vertex count
     n_edges: int
     strategy: str
     num_partitions: int
     hot_srcs: DataFrame | None = None     # shuffle mode: ≤HOT_MIRROR_CAP-row
-                                          # (vertex,) table of salted srcs —
+                                          # (src,) table of salted srcs —
                                           # the superstep broadcast-filters
                                           # the rank state against it
 
@@ -142,138 +138,67 @@ def _vertices(edges: DataFrame) -> DataFrame:
 def _prepare(edges: DataFrame, num_partitions: int, strategy: str,
              hot_threshold: int | None = None, n_edges: int | None = None):
     """Static per-run tables.  Edge tables are laid out ONCE (G11) and
-    never re-shuffle inside the loop.
-
-    Broadcast mode applies G10 hot-vertex mirroring at layout time: a
-    vertex whose in-degree exceeds ``hot_threshold`` (default
-    max(edges/partitions/4, 16384)) would otherwise put all its edges
-    in one hash(dst) partition and cap scaling at that straggler.  Hot
-    vertices' edges are spread across ALL partitions by an src-derived
-    salt; their per-partition partial sums re-combine through a tiny
-    (#hot x P rows) exchange in the superstep — algebraically exact
-    two-level aggregation (SURVEY.md §2.11 G10).
+    never re-shuffle inside the loop; skew.split_hot splits hot vertices
+    off the layout (G10), keyed on the layout column — dst in broadcast
+    mode, src in shuffle mode.
 
     Returns (cold_edges, hot_edges_or_None, hot_srcs_or_None, n_edges);
     the layouts come back MATERIALIZED (counted) and n_edges is that
     count, so callers never re-scan the caches to size the graph.  The
     third element is shuffle-mode-only (see PreparedGraph.hot_srcs).
     """
-    spark = edges.sparkSession
     if strategy == "broadcast":
-        if n_edges is None:
-            n_edges = edges.count()
-        if hot_threshold is None:
-            hot_threshold = max(n_edges // num_partitions // 4, 16384)
-        # one (src) shuffle, reused by BOTH norm branches below — a bare
-        # agg expression would re-run the shuffle per consuming branch
-        # (measured as ~20% of total bench wall in round 3).  persist
-        # (not localCheckpoint) so it can be RELEASED right after the
+        # one (src) out-weight shuffle, reused by BOTH norm branches — a
+        # bare agg expression would re-run the shuffle per consuming
+        # branch (measured as ~20% of total bench wall in round 3).
+        # persist (not localCheckpoint) so it is RELEASED once the
         # layouts materialize instead of pinning O(|V|) blocks until GC.
         out_w = (
             edges.groupBy("src")
             .agg(F.sum("weight").alias("out_w"))
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        deg_in = edges.groupBy("dst").agg(F.count("*").alias("ind"))
-        # r6: hot-vertex detection and the out-weight cache build are
-        # independent scans of the same cached input — overlap them so
-        # out_w is warm by the time the layouts (its only consumers)
-        # materialize (guide §2.6); cached bytes identical either way
-        from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=2) as _pool:
-            _f_hot = _pool.submit(
-                deg_in.filter(F.col("ind") > hot_threshold)
-                .orderBy(F.col("ind").desc())
-                .select("dst").limit(HOT_MIRROR_CAP + 1).collect
+        def norm(df, _hot_w=None):
+            return df.join(F.broadcast(out_w), "src").select(
+                "src", "dst", (F.col("weight") / F.col("out_w")).alias("w")
             )
-            _f_ow = _pool.submit(out_w.count)
-            hot_rows = _f_hot.result()
-            _f_ow.result()
-        if len(hot_rows) > HOT_MIRROR_CAP:
-            hot_rows = hot_rows[:HOT_MIRROR_CAP]
-            log.warning(
-                "G10: more than %d vertices exceed the hot threshold %d; "
-                "mirroring only the %d highest-degree ones — the rest take "
-                "the plain hash(dst) path (raise hot_threshold or "
-                "HOT_MIRROR_CAP if stragglers appear)",
-                HOT_MIRROR_CAP, hot_threshold, HOT_MIRROR_CAP,
-            )
-        norm = lambda df: df.join(F.broadcast(out_w), "src").select(  # noqa: E731
-            "src", "dst", (F.col("weight") / F.col("out_w")).alias("w")
-        )
-        if hot_rows:
-            # broadcast-anti/semi against the collected hot set instead of
-            # an IN-list literal: plan size stays flat at HOT_MIRROR_CAP
-            hot_dst = spark.createDataFrame(hot_rows, edges.select("dst").schema)
-            cold = norm(
-                edges.join(F.broadcast(hot_dst), "dst", "left_anti")
-                .repartition(num_partitions, "dst")
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-            # row-content salt: src alone is itself Zipf-skewed (a hot
-            # dst's in-edges can share one hub src), so salt on the full
-            # row — deterministic, and exact under two-level sum
-            salt = F.pmod(F.xxhash64("src", "dst", "weight"), F.lit(num_partitions))
-            hot = norm(
-                edges.join(F.broadcast(hot_dst), "dst", "left_semi")
-                .repartition(num_partitions, F.col("dst"), salt)
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-        else:
-            cold = norm(
-                edges.repartition(num_partitions, "dst")
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-            hot = None
-        # materialize the layouts while out_w (and the caller-persisted
-        # input) are cached, then release out_w — it is baked into the
-        # persisted layouts and must not outlive the build.  The counts
-        # double as the n_edges tally (norm preserves rows) so the
-        # caller never re-scans the cached layouts just to count them.
-        # r6: the two cache builds are independent jobs over disjoint
-        # row sets — run them concurrently so the smaller build rides
-        # in the larger one's scheduling tail (guide §2.6); the cached
-        # bytes are identical either way.
-        if hot is not None:
-            from concurrent.futures import ThreadPoolExecutor
 
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                f_cold = pool.submit(cold.count)
-                f_hot = pool.submit(hot.count)
-                n_cold, n_hot = f_cold.result(), f_hot.result()
-        else:
-            n_cold = cold.count()
-            n_hot = 0
-        out_w.unpersist()
-        return cold, hot, None, n_cold + n_hot
+        try:
+            # the out-weight cache build and hot-dst detection are
+            # independent scans of the same cached input — overlap them
+            # so out_w is warm by the time the layouts (its only
+            # consumers) materialize
+            with ThreadPoolExecutor(max_workers=1) as pool:
+                warm = pool.submit(out_w.count)
+                split = split_hot(
+                    edges, "dst", num_partitions, hot_threshold, n_edges,
+                    map_cold=norm, map_hot=norm,
+                )
+                warm.result()
+        finally:
+            out_w.unpersist()
+        return split.cold, split.hot, None, split.n_edges
     # shuffle mode (the beyond-broadcast |V| regime): hash(src) layout —
     # the state join is exchange-free on the edge side and the per-src
-    # normalization window is partition-local.  A hot SOURCE vertex (the
-    # bench hub: ~30% of all edges from one src) would put its whole
-    # out-edge list in ONE partition — the same straggler G10 mirrors on
-    # the dst side in broadcast mode.  Treatment: salt hot srcs' edges
-    # across all partitions and normalize them via a broadcast join with
-    # their (≤HOT_MIRROR_CAP-row) out-weight table; each superstep then
-    # broadcasts only the hot slice of the rank state into that branch
-    # (step()), so hot edges never re-shuffle.  Exact: per-src sums are
-    # unchanged, only the partition placement differs (L7 algebra).
-    from sparkgatha.graph.skew import split_hot_srcs
-
+    # normalization window is partition-local.  Hot srcs' edges are
+    # normalized via a broadcast join with their (≤HOT_MIRROR_CAP-row)
+    # out-weight table instead; each superstep then broadcasts only the
+    # hot slice of the rank state into that branch (step()), so hot
+    # edges never re-shuffle.
     w_out = W.partitionBy("src")
     norm_window = lambda df: df.select(  # noqa: E731
         "src", "dst", (F.col("weight") / F.sum("weight").over(w_out)).alias("w")
     )
     norm_bcast = lambda df, hot_w: (  # noqa: E731
         df.join(F.broadcast(hot_w), "src")
-        .select("src", "dst", (F.col("weight") / F.col("out_w")).alias("w"))
+        .select("src", "dst", (F.col("weight") / F.col("hot_w")).alias("w"))
     )
-    split = split_hot_srcs(
-        edges.select("src", "dst", "weight"), num_partitions, hot_threshold,
-        HOT_MIRROR_CAP, map_cold=norm_window, map_hot=norm_bcast,
-        # the frame passed is a FREE projection of `edges`; its lineage
-        # is only cheap when the underlying edge table is cached — keep
-        # this flag in sync if the projection ever gains real work
-        persist_input=edges.storageLevel == StorageLevel.NONE,
+    split = split_hot(
+        edges, "src", num_partitions, hot_threshold, n_edges,
+        map_cold=norm_window, map_hot=norm_bcast,
     )
-    return split.cold, split.hot, split.hot_srcs, split.n_edges
+    return split.cold, split.hot, split.hot_keys, split.n_edges
 
 
 def prepare_pagerank(
@@ -290,12 +215,11 @@ def prepare_pagerank(
     done (``pagerank`` without ``prepared=`` does this automatically).
 
     The input edge frame feeds up to six passes here (vertex table,
-    edge count, in-degree detection, out-weight normalization, both
-    layout builds), so a raw-lineage input is persisted ONCE for the
-    duration of the build — the split_hot_srcs discipline, hoisted so
-    broadcast mode and ``_vertices`` share it.  A frame the caller
-    already persisted is left alone (persisting again would no-op and
-    the exit unpersist would drop THEIR cache)."""
+    edge count, hot detection, out-weight normalization, both layout
+    builds), so a raw-lineage input is persisted ONCE for the duration
+    of the build.  A frame the caller already persisted is left alone
+    (persisting again would no-op and the exit unpersist would drop
+    THEIR cache)."""
     owned_input = edges.storageLevel == StorageLevel.NONE
     if owned_input:
         edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
@@ -305,8 +229,6 @@ def prepare_pagerank(
             # independent scans of the cached input — overlap them
             # (guide §2.6); strategy choice only needs n, which both
             # paths wait on
-            from concurrent.futures import ThreadPoolExecutor
-
             vertices = _vertices(edges)
             with ThreadPoolExecutor(max_workers=2) as pool:
                 f_n = pool.submit(vertices.count)

@@ -4,10 +4,10 @@ The superstep join ``edges ⋈ state ON edges.src = state.vertex`` must not
 re-shuffle the (large, static) edge table every iteration.  Spark reuses
 a persisted DataFrame's output partitioning when it satisfies the join's
 distribution requirement, which for an equi-join is *hash* partitioning
-on the key — so the in-loop layout is ``repartition(P, 'src')`` (hash),
-sorted within partitions for CSR-style locality.  The *serving* export
-(io.write_adjacency) uses range partitioning instead, where ordered key
-lookup matters more than exchange reuse.
+on the key — so the in-loop layouts are ``repartition(P, key)`` (hash,
+persisted once; skew.split_hot builds them for PageRank and shuffle-mode
+LPA).  The *serving* export (io.write_adjacency) uses range partitioning
+instead, where ordered key lookup matters more than exchange reuse.
 
 ``spark.sql.shuffle.partitions`` must equal P (session.py pins both to
 the same default) or the state side's shuffle lands on a different
@@ -15,26 +15,6 @@ partition count and the edge side re-shuffles anyway (SURVEY.md §4.3).
 """
 
 from __future__ import annotations
-
-from pyspark.sql import DataFrame
-from pyspark.storagelevel import StorageLevel
-
-
-def layout_edges(
-    edges: DataFrame,
-    num_partitions: int = 32,
-    key: str = "src",
-    persist: bool = True,
-) -> DataFrame:
-    """Hash-partition by join key + sort within partitions + persist.
-
-    Returns the laid-out DataFrame; caller must trigger an action (the
-    first superstep does) to materialize the cache.
-    """
-    out = edges.repartition(num_partitions, key).sortWithinPartitions(key, "dst")
-    if persist:
-        out = out.persist(StorageLevel.MEMORY_AND_DISK)
-    return out
 
 
 def assert_no_edge_exchange(plan: str) -> bool:

@@ -1,5 +1,5 @@
-"""G10/J9 — explicit skew handling: hot-vertex mirroring + salted joins
-(SURVEY.md §2.11 G10, §2.3 J9).
+"""G10 — explicit skew handling: hot vertices are split off the edge
+layout before its shuffle (SURVEY.md §2.11 G10).
 
 Reference analog: AGATHA's hub terms (ubiquitous lemmas / common code
 identifiers in the graft) are super-nodes; the reference controls them
@@ -9,28 +9,25 @@ that lever.  At 10^12-file scale cutoffs alone don't suffice, so the
 north rule adds *mechanical* mitigation: "degree-skew hot vertices are
 split via high-degree vertex mirroring before the shuffle".
 
-Two algebraically-exact tools (results identical with skew handling on
-or off — test layer L7):
-
- * ``salted_agg`` — two-level aggregation: rows of a hot key first
-   aggregate under (key, salt) across K partitions, then the K partials
-   combine.  Exact for any algebraic agg (sum/min/max/count).  Note
-   Spark's own map-side partial aggregation already bounds reduce skew
-   for these; salting matters when the *map-side hash table* degrades
-   or for high-cardinality composite aggs.
-
- * ``mirrored_join`` — broadcast the hot keys' build rows (they are few
-   keys × small payload), shuffle-join only the cold remainder, union.
-   The hot side never hits a shuffle partition at all — "mirroring": the
-   hub's state is replicated to every executor instead of gathering the
-   hub's edges onto one reducer.  AQE's skewJoin splits oversized
-   partitions too (enabled in session.py); this is the deterministic,
-   plan-visible variant.
+The iterative algorithms lay their edge table out ONCE, hash-partitioned
+by the column their superstep aggregates or joins on: ``dst`` for
+broadcast-mode PageRank (the gather groups by dst), ``src`` for
+shuffle-mode PageRank and LPA (the state joins on src).  A vertex with
+more edges on that key than the hot threshold would park all of them in
+one partition and cap scaling at that straggler.  :func:`split_hot` is
+the one place the rule lives: it detects the hot keys, spreads their
+edges over every partition by a row-content salt and hash-partitions the
+cold remainder by the key.  The algorithms recombine the hot branch
+exactly — PageRank's broadcast mode sums the salted per-partition
+partials in a (#hot x P)-row exchange; the src-keyed layouts join the
+salted edges against a broadcast of the hot keys' rank/label rows — so
+results are identical with the split on or off (test layer L7).
 """
 
 from __future__ import annotations
 
 import logging
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, functions as F
@@ -38,200 +35,128 @@ from pyspark.storagelevel import StorageLevel
 
 log = logging.getLogger(__name__)
 
+#: above this vertex count the rank/label vector stops being
+#: broadcastable and PageRank/LPA take their shuffle strategy
+BROADCAST_MAX_VERTICES = 20_000_000
+
+#: split-hot-key cap per layout (G10): keys beyond it fall back to the
+#: straggler path — logged, never silent (each split key costs up to P
+#: partial rows per superstep, so the cap bounds that exchange)
+HOT_MIRROR_CAP = 10_000
+
+#: the default hot threshold never drops below this many edges
+_HOT_FLOOR = 16_384
+
 
 @dataclass
-class HotSrcSplit:
-    """Result of :func:`split_hot_srcs` — the shuffle-strategy G10
-    layout shared by PageRank and LPA."""
+class HotSplit:
+    """Result of :func:`split_hot`: both layouts persisted and
+    materialized."""
 
-    cold: DataFrame                 # hash(src) layout, persisted
-    hot: DataFrame | None           # (src, salt) layout, persisted
-    hot_srcs: DataFrame | None      # ≤HOT_MIRROR_CAP rows (src)
-    hot_w: DataFrame | None         # (src, out_w) for the hot set
-    n_edges: int
-    hot_threshold: int
+    cold: DataFrame                 # hash(key) layout
+    hot: DataFrame | None           # (key, salt) layout
+    hot_keys: DataFrame | None      # ≤HOT_MIRROR_CAP rows, column `key`
+    n_edges: int                    # rows in cold + hot
 
 
-def split_hot_srcs(
-    pre: DataFrame,
+def split_hot(
+    edges: DataFrame,
+    key: str,
     num_partitions: int,
     hot_threshold: int | None = None,
-    hot_mirror_cap: int = 10_000,
+    n_edges: int | None = None,
     map_cold=None,
     map_hot=None,
-    persist_input: bool | None = None,
-) -> HotSrcSplit:
-    """Shuffle-strategy G10 treatment, shared by PageRank and LPA (was
-    duplicated line-for-line; one copy keeps the threshold rule, cap
-    handling, and salt formula in sync).
+) -> HotSplit:
+    """Lay ``edges(src, dst, weight)`` out by ``key`` ("dst" or "src")
+    with the edges of hot keys split off.
 
-    Detects hot SOURCE vertices (out-degree > threshold, default
-    edges/partitions/4 with a 16384 floor, capped at ``hot_mirror_cap``
-    with a logged warning), salts their edges across all partitions via
-    ``pmod(xxhash64(src,dst,weight), P)``, hash(src)-partitions the cold
-    remainder, and persists+materializes both layouts.
+    A key is hot when it has more than ``hot_threshold`` edges (default
+    max(E/P/4, 16384), E = ``n_edges``, counted here when not given).
+    At most HOT_MIRROR_CAP keys with the most edges are split, with a
+    logged warning when more qualify.  Hot edges spread over all
+    partitions by ``pmod(xxhash64(src,dst,weight), P)``; cold edges are
+    hash(key)-partitioned.  Both layouts are persisted and counted
+    concurrently (independent jobs over disjoint rows, so the smaller
+    build rides in the larger one's scheduling tail).
 
-    ``pre`` (src, dst, weight) is persisted HERE before the stats and
-    layout builds (it used to be re-scanned up to 4x when the caller
-    passed raw lineage) and released once the layouts are materialized —
-    UNLESS ``persist_input=False``, where the caller vouches the lineage
-    is cheap (a projection of a cached table) and accepts the ~4 scans.
-    A frame the caller already persisted is never unpersisted here.
+    The (src, dst, weight) projection is persisted for the build unless
+    the caller already persisted ``edges`` — a caller's cache is never
+    touched — and that owned copy is released before returning.
 
     ``map_cold(df)`` / ``map_hot(df, hot_w)`` transform each branch
     AFTER its repartition but BEFORE the persist, so per-row derivations
     (PageRank's weight normalization) are computed once into the cached
-    layout, not per superstep — and the partition-local window a
-    map_cold may use sees the final hash(src) layout.
+    layout; ``hot_w`` is (key, hot_w), each hot key's total edge weight.
     """
-    spark = pre.sparkSession
-    # persist the input before the 3 passes below UNLESS the caller says
-    # its lineage is already cheap (e.g. a projection of a cached table
-    # — persisting that would duplicate the edge set in memory).  Never
-    # take ownership of a frame the caller persisted itself: persist()
-    # would no-op and the exit unpersist would drop THEIR cache.
-    owned = (
-        persist_input is not False
-        and pre.storageLevel == StorageLevel.NONE
-    )
+    spark = edges.sparkSession
+    owned = edges.storageLevel == StorageLevel.NONE
+    pre = edges.select("src", "dst", "weight")
     if owned:
         pre = pre.persist(StorageLevel.MEMORY_AND_DISK)
-    n_edges = pre.count()
-    if hot_threshold is None:
-        hot_threshold = max(n_edges // num_partitions // 4, 16384)
-    hot_rows = (
-        pre.groupBy("src")
-        .agg(F.sum("weight").alias("out_w"), F.count("*").alias("outd"))
-        .filter(F.col("outd") > hot_threshold)
-        .orderBy(F.col("outd").desc())
-        .select("src", "out_w")
-        .limit(hot_mirror_cap + 1)
-        .collect()
-    )
-    if len(hot_rows) > hot_mirror_cap:
-        hot_rows = hot_rows[:hot_mirror_cap]
-        log.warning(
-            "G10/shuffle: more than %d srcs exceed the hot threshold %d; "
-            "salting only the %d highest-out-degree ones — the rest take "
-            "the plain hash(src) path (raise hot_threshold or the cap if "
-            "stragglers appear)",
-            hot_mirror_cap, hot_threshold, hot_mirror_cap,
+    try:
+        # the plan filters at a lower bound of the threshold, so
+        # detection runs beside the edge count (which builds the owned
+        # input cache) instead of after it; the exact threshold is then
+        # applied to the few collected rows
+        detect = (
+            pre.groupBy(key)
+            .agg(F.count("*").alias("deg"), F.sum("weight").alias("hot_w"))
+            .filter(F.col("deg") > (
+                _HOT_FLOOR if hot_threshold is None else hot_threshold
+            ))
+            .orderBy(F.col("deg").desc())
+            .limit(HOT_MIRROR_CAP + 1)
         )
-    ident = lambda df: df  # noqa: E731
-    map_cold = map_cold or ident
-    if hot_rows:
-        hot_w = spark.createDataFrame(hot_rows)  # (src, out_w), ≤ cap rows
-        hot_srcs = hot_w.select("src")
-        salt = F.pmod(F.xxhash64("src", "dst", "weight"), F.lit(num_partitions))
-        hot = pre.join(F.broadcast(hot_srcs), "src", "left_semi").repartition(
-            num_partitions, F.col("src"), salt
-        )
-        hot = (map_hot(hot, hot_w) if map_hot else hot).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
+        with ThreadPoolExecutor(max_workers=1) as pool:
+            f_rows = pool.submit(detect.collect)
+            if hot_threshold is None:
+                if n_edges is None:
+                    n_edges = pre.count()
+                hot_threshold = max(n_edges // num_partitions // 4, _HOT_FLOOR)
+            rows = [r for r in f_rows.result() if r["deg"] > hot_threshold]
+        if len(rows) > HOT_MIRROR_CAP:
+            rows = rows[:HOT_MIRROR_CAP]
+            log.warning(
+                "G10: more than %d %s vertices exceed the hot threshold %d; "
+                "splitting only the %d with the most edges — the rest take "
+                "the plain hash(%s) path (raise hot_threshold or "
+                "HOT_MIRROR_CAP if stragglers appear)",
+                HOT_MIRROR_CAP, key, hot_threshold, HOT_MIRROR_CAP, key,
+            )
+        map_cold = map_cold or (lambda df: df)
+        hot = hot_keys = None
+        cold_rows = pre
+        if rows:
+            # broadcast semi/anti joins against the collected hot set
+            # instead of an IN-list literal: plan size stays flat at
+            # HOT_MIRROR_CAP
+            hot_w = spark.createDataFrame(rows, detect.schema).select(key, "hot_w")
+            hot_keys = hot_w.select(key)
+            # row-content salt: src alone is itself Zipf-skewed (a hot
+            # dst's in-edges can share one hub src), so salt on the full
+            # row — deterministic, and exact under the recombining agg
+            salt = F.pmod(F.xxhash64("src", "dst", "weight"), F.lit(num_partitions))
+            hot = pre.join(F.broadcast(hot_keys), key, "left_semi").repartition(
+                num_partitions, F.col(key), salt
+            )
+            hot = (map_hot(hot, hot_w) if map_hot else hot).persist(
+                StorageLevel.MEMORY_AND_DISK
+            )
+            cold_rows = pre.join(F.broadcast(hot_keys), key, "left_anti")
         cold = map_cold(
-            pre.join(F.broadcast(hot_srcs), "src", "left_anti")
-            .repartition(num_partitions, "src")
+            cold_rows.repartition(num_partitions, key)
         ).persist(StorageLevel.MEMORY_AND_DISK)
-        hot.count()
-    else:
-        hot = hot_srcs = hot_w = None
-        cold = map_cold(
-            pre.repartition(num_partitions, "src")
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-    cold.count()
-    if owned:
-        pre.unpersist()
-    return HotSrcSplit(cold, hot, hot_srcs, hot_w, n_edges, hot_threshold)
-
-
-def hot_keys(df: DataFrame, key: str, threshold: int) -> DataFrame:
-    """Keys whose row count exceeds ``threshold`` (the mirror set)."""
-    return (
-        df.groupBy(key)
-        .agg(F.count("*").alias("_cnt"))
-        .filter(F.col("_cnt") > threshold)
-        .select(key)
-    )
-
-
-def salted_agg(
-    df: DataFrame,
-    key: str,
-    value: str,
-    agg: str = "sum",
-    num_salts: int = 16,
-    hot: DataFrame | None = None,
-) -> DataFrame:
-    """Two-level exact aggregation: groupBy(key, salt) → groupBy(key).
-
-    ``agg`` ∈ {sum, min, max, count} (algebraic decompositions).
-    If ``hot`` is given, only those keys are salted; cold keys take the
-    one-level path and the two unions back together.
-    """
-    fns = {
-        "sum": (F.sum, F.sum),
-        "min": (F.min, F.min),
-        "max": (F.max, F.max),
-        "count": (F.count, F.sum),
-    }
-    partial_fn, final_fn = fns[agg]
-
-    def two_level(d: DataFrame) -> DataFrame:
-        # salt from ROW CONTENT, not monotonically_increasing_id():
-        # the generated id is nondeterministic under task/stage retry,
-        # and a recomputed partition re-salting rows differently while
-        # sibling reduce outputs are reused can double-count or drop
-        # partial sums.  Content-hash salting is retry-stable; rows
-        # identical in every column share a salt (acceptable: real
-        # gather rows carry distinct payloads, and exactness beats a
-        # marginally better spread)
-        salted = d.withColumn(
-            "_salt",
-            F.pmod(
-                F.xxhash64(*[F.col(c) for c in d.columns]),
-                F.lit(num_salts),
-            ),
-        )
-        partial = salted.groupBy(key, "_salt").agg(
-            partial_fn(value).alias("_p")
-        )
-        return partial.groupBy(key).agg(final_fn("_p").alias(value))
-
-    if hot is None:
-        return two_level(df)
-    hot_b = F.broadcast(hot)
-    hot_rows = df.join(hot_b, key, "left_semi")
-    cold_rows = df.join(hot_b, key, "left_anti")
-    one_level = cold_rows.groupBy(key).agg(partial_fn(value).alias(value))
-    return two_level(hot_rows).unionByName(one_level)
-
-
-def mirrored_join(
-    big: DataFrame,
-    state: DataFrame,
-    big_key: str,
-    state_key: str,
-    threshold: int = 100_000,
-    hot: DataFrame | None = None,
-) -> DataFrame:
-    """Equi-join ``big ⋈ state`` with hub keys replicated (broadcast)
-    instead of shuffled — exact same rows as a plain inner join.
-
-    ``hot`` overrides detection (pass the precomputed mirror set at
-    superstep time so detection isn't re-run per iteration).
-    """
-    if hot is None:
-        hot = hot_keys(big, big_key, threshold)
-    hot = hot.select(F.col(big_key).alias("_hk"))
-    hot_b = F.broadcast(hot)
-
-    big_hot = big.join(hot_b, big[big_key] == F.col("_hk"), "left_semi")
-    big_cold = big.join(hot_b, big[big_key] == F.col("_hk"), "left_anti")
-    state_hot = state.join(hot_b, state[state_key] == F.col("_hk"), "left_semi")
-
-    joined_hot = big_hot.join(
-        F.broadcast(state_hot), big_hot[big_key] == state_hot[state_key]
-    )
-    joined_cold = big_cold.join(state, big_cold[big_key] == state[state_key])
-    return joined_hot.unionByName(joined_cold)
+        layouts = [d for d in (cold, hot) if d is not None]
+        try:
+            with ThreadPoolExecutor(max_workers=2) as pool:
+                counts = [pool.submit(d.count) for d in layouts]
+                n_laid_out = sum(f.result() for f in counts)
+        except BaseException:
+            for d in layouts:
+                d.unpersist()
+            raise
+        return HotSplit(cold, hot, hot_keys, n_laid_out)
+    finally:
+        if owned:
+            pre.unpersist()

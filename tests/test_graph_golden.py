@@ -372,21 +372,3 @@ def test_coarsen_conserves_weight_and_self_loops(spark):
         for r in coarsen_by_labels(edges, labels).collect()
     }
     assert got == {("x", "x"): 4.0, ("x", "y"): 2.0, ("y", "y"): 5.0}
-
-
-def test_cc_fused_blocks_identical(spark):
-    """check_every>1 fuses star rounds into one job but must be
-    label-identical to per-round execution, including a block size that
-    does not divide the round count."""
-    triples = random_graph(n=150, m=260, seed=53)
-    edges = to_spark_edges(spark, triples, symmetric=True)
-    base = {
-        r["vertex"]: r["component"]
-        for r in connected_components(edges).collect()
-    }
-    for ce in (3, 7):
-        fused = {
-            r["vertex"]: r["component"]
-            for r in connected_components(edges, check_every=ce).collect()
-        }
-        assert fused == base, ce

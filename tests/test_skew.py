@@ -1,13 +1,12 @@
-"""L7 — skew handling: hot-vertex mirroring changes the physical layout,
-never the result; salted aggregation is algebraically exact
-(SURVEY.md §5.2 L7)."""
+"""L7 — skew handling: the hot-vertex split changes the physical layout,
+never the result, and bounds the largest partition (SURVEY.md §5.2 L7)."""
 
 from pyspark.sql import functions as F
 
 from graph_helpers import pagerank_oracle, powerlaw_graph, to_spark_edges, undirected_both
 
-from sparkgatha.graph.pagerank import pagerank
-from sparkgatha.graph.skew import hot_keys, mirrored_join, salted_agg
+from sparkgatha.graph.pagerank import pagerank, prepare_pagerank
+from sparkgatha.graph.skew import split_hot
 from sparkgatha.synthetic import powerlaw_edges
 
 
@@ -30,46 +29,6 @@ def test_pagerank_hot_mirroring_exact(spark):
         got = {x["vertex"]: x["rank"] for x in r.ranks.collect()}
         for k in want:
             assert abs(got[k] - want[k]) < 1e-12, pr_kwargs
-
-
-def test_synthetic_hub_is_mirrored(spark):
-    """The bench generator's hub vertex must trip the hot detector."""
-    e = powerlaw_edges(spark, 200_000, n_vertices=20_000, num_partitions=8)
-    hot = hot_keys(e, "dst", threshold=200_000 // 8 // 2)
-    assert hot.count() >= 1
-
-
-def test_salted_agg_exact(spark):
-    e = powerlaw_edges(spark, 100_000, n_vertices=5_000, num_partitions=8)
-    plain = e.groupBy("dst").agg(F.sum("weight").alias("weight"))
-    hot = hot_keys(e, "dst", threshold=1000)
-    salted = salted_agg(e, "dst", "weight", agg="sum", num_salts=8, hot=hot)
-    diff = (
-        plain.withColumnRenamed("weight", "a")
-        .join(salted.withColumnRenamed("weight", "b"), "dst", "full_outer")
-        .filter(
-            F.col("a").isNull()
-            | F.col("b").isNull()
-            | (F.abs(F.col("a") - F.col("b")) > 1e-9)
-        )
-        .count()
-    )
-    assert diff == 0
-
-
-def test_mirrored_join_exact(spark):
-    e = powerlaw_edges(spark, 100_000, n_vertices=5_000, num_partitions=8)
-    state = (
-        e.select(F.col("src").alias("vertex")).distinct()
-        .withColumn("val", F.col("vertex") * 2)
-    )
-    plain = e.join(state, e.src == state.vertex).select("src", "dst", "val")
-    mirrored = mirrored_join(e, state, "src", "vertex", threshold=1000).select(
-        "src", "dst", "val"
-    )
-    assert plain.count() == mirrored.count()
-    assert plain.exceptAll(mirrored).count() == 0
-    assert mirrored.exceptAll(plain).count() == 0
 
 
 def test_no_straggler_partition_after_mirroring(spark):
@@ -115,3 +74,44 @@ def test_no_straggler_partition_shuffle_strategy(spark):
     median = sizes[len(sizes) // 2]
     assert sizes[-1] <= 4 * median, sizes
     cold.unpersist(); hot.unpersist()
+
+
+def test_prepare_releases_only_the_caches_it_owns(spark):
+    """prepare_pagerank + unpersist leaves no cache behind in either
+    strategy, with the split forced on and off, and never releases a
+    cache the caller owns; split_hot releases the input copy it
+    persists itself.  Compared as sets of persisted RDD ids: other
+    tests' caches may be garbage-collected meanwhile."""
+    edges = to_spark_edges(spark, powerlaw_graph(n=150, m=600, seed=13))
+    cached = to_spark_edges(spark, powerlaw_graph(n=150, m=600, seed=14))
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    start = persisted()
+    configs = [(s, t) for s in ("broadcast", "shuffle") for t in (1, 10**9)]
+    for strategy, threshold in configs:
+        prepare_pagerank(
+            edges, num_partitions=4, strategy=strategy, hot_threshold=threshold
+        ).unpersist()
+        assert not persisted() - start, (strategy, threshold)
+    for key in ("src", "dst"):
+        split = split_hot(edges, key, 4, hot_threshold=1)
+        assert len(persisted() - start) == 2, key  # the cold and hot layouts
+        split.cold.unpersist(blocking=True)
+        split.hot.unpersist(blocking=True)
+        assert not persisted() - start, key
+
+    cached.persist()
+    cached.count()
+    start = persisted()
+    try:
+        for strategy, threshold in configs:
+            prepare_pagerank(
+                cached, num_partitions=4, strategy=strategy,
+                hot_threshold=threshold,
+            ).unpersist()
+            assert cached.storageLevel.useMemory, (strategy, threshold)
+            assert not persisted() - start, (strategy, threshold)
+    finally:
+        cached.unpersist(blocking=True)
